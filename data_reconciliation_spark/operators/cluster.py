@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_reconciliation_spark.session import driver_table
 from data_reconciliation_spark.sources.state import CheckpointManager
 
 
@@ -154,7 +155,7 @@ def _local_union_find(e: DataFrame) -> DataFrame:
     pdf = e.toPandas()
     out_schema = f"node {node_type.simpleString()}, component {node_type.simpleString()}"
     if len(pdf) == 0:
-        return spark.createDataFrame([], schema=out_schema)
+        return driver_table(spark, [], out_schema)
 
     raw_codes, uniq = pd.factorize(
         pd.concat([pdf["src"], pdf["dst"]], ignore_index=True)

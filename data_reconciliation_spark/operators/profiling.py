@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_reconciliation_spark.session import driver_table
+
 
 def uniqueness_profile(df: DataFrame, approx: bool = False) -> DataFrame:
     """One row per column: distinct count, row count, is_unique flag.
@@ -32,8 +34,10 @@ def uniqueness_profile(df: DataFrame, approx: bool = False) -> DataFrame:
         (c, int(row[f"__d_{i}"]), int(n), bool(n > 0 and row[f"__d_{i}"] == n))
         for i, c in enumerate(df.columns)
     ]
-    return df.sparkSession.createDataFrame(
-        data, "column string, distinct_count long, row_count long, is_unique boolean"
+    return driver_table(
+        df.sparkSession,
+        data,
+        "column string, distinct_count long, row_count long, is_unique boolean",
     )
 
 

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from data_reconciliation_spark.session import driver_table
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -189,7 +191,8 @@ def _lloyd_refine(
             )
             .collect()
         )
-        cents = spark.createDataFrame(
+        cents = driver_table(
+            spark,
             [(r["centroid_id"], r["__cvec"]) for r in refreshed],
             f"centroid_id {seeds.schema['centroid_id'].dataType.simpleString()}, "
             "__cvec array<float>",

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from data_reconciliation_spark.functions.normalize import normalized_text
 from data_reconciliation_spark.functions.similarity import levenshtein_similarity
 from data_reconciliation_spark.operators.reconcile import reconcile
+from data_reconciliation_spark.session import driver_table
 from data_reconciliation_spark.sources.readers import read_table
 
 # ---------------------------------------------------------------------------
@@ -185,7 +186,8 @@ def q_a1_match_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = reconcile(
         old, new, ["o_orderkey"], RECON_CFG, metrics_only=True, unique_pk=True
     )
-    return spark.createDataFrame(
+    return driver_table(
+        spark,
         [
             (
                 res.n_both,

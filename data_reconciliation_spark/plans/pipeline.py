@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from data_reconciliation_spark.config import BlockingConfig, ScoringConfig
 from data_reconciliation_spark.operators.cluster import _rebind, connected_components
 from data_reconciliation_spark.operators.scoring import block_score_pipeline
+from data_reconciliation_spark.session import driver_table
 from data_reconciliation_spark.sources.state import CheckpointManager
 
 # Below this input size the pipeline is LATENCY-bound: its ~30 stage
@@ -132,7 +133,8 @@ def link(
         fanout = pair_fanout(scored)
         if fanout is not None:
             checkpoint.write_lineage(
-                scored.sparkSession.createDataFrame(
+                driver_table(
+                    scored.sparkSession,
                     [(fanout, 0, "pair_fanout")],
                     "row_count long, iteration int, stage string",
                 ).withColumn("saved_at", F.current_timestamp())

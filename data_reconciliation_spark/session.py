@@ -3,14 +3,18 @@
 Local test sessions use ``local[N]``; the same builder config is what a
 ``spark-submit --py-files`` cluster deployment would use (AQE on, Arrow
 on, skew-join handling on).  Nothing here is local-mode specific except
-the master URL.
+the master URL.  ``driver_table`` builds the small tables the library
+assembles on the driver (audit headers, rejection markers, lineage
+rows, profiles) over Arrow instead of through Python workers.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def build_session(
@@ -48,3 +52,36 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def driver_table(
+    spark: SparkSession, rows: Iterable[tuple], schema: str | T.StructType
+) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples in ``schema`` order),
+    loaded on the JVM from one Arrow table.
+
+    ``createDataFrame(list, schema)`` pickles the rows, parallelizes them
+    and converts them in a Python-worker ``map``: a worker round trip
+    even for a single row.  A ``pyarrow.Table`` instead goes straight to
+    the JVM (``_create_from_arrow_table``), whatever the session's Arrow
+    setting.  Timestamps are converted exactly as the list path converts
+    them (a naive ``datetime`` is process-local time), so the stored
+    instant is the same on either path.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for field, atype, values in zip(schema.fields, arrow_schema.types, columns):
+        if isinstance(field.dataType, T.TimestampType):
+            micros = [field.dataType.toInternal(v) for v in values]
+            arrays.append(pa.array(micros, pa.int64()).cast(atype))
+        else:
+            arrays.append(pa.array(values, atype))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema
+    )

@@ -18,6 +18,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_reconciliation_spark.session import driver_table
+
 # Reference admits legacy .xls too (helpers.py:6-19, parsed via xlrd).
 # Rounds 2-3 honestly rejected .xls at the gate (no xlrd in this
 # environment); round 4 restores parity with a pure-stdlib BIFF8 reader
@@ -175,7 +177,7 @@ def _rows_to_df(spark: SparkSession, header: list[str], rows: list[list]):
     data = [
         tuple(cols[j][1][i] for j in range(len(header))) for i in range(len(rows))
     ]
-    return spark.createDataFrame(data, schema)
+    return driver_table(spark, data, schema)
 
 
 def read_excel_small(spark: SparkSession, path: str, sheet: int = 0) -> DataFrame:

@@ -12,6 +12,10 @@ sandbox has no Iceberg runtime jar, so the default backend is
 Parquet directories + an atomically-renamed JSON manifest — the same
 commit protocol (write data, then publish metadata) Iceberg uses,
 scoped down.  Swapping backends changes only this module.
+
+Tables built on the driver (run headers, rejection markers) go over
+Arrow through ``session.driver_table``: the JVM loads them directly,
+with no Python-worker round trip per write.
 """
 
 from __future__ import annotations
@@ -25,6 +29,8 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_reconciliation_spark.session import driver_table
+
 
 def dense_sorted_index(
     df: DataFrame, idx_name: str = "exc_idx", num_partitions: int | None = None
@@ -33,14 +39,16 @@ def dense_sorted_index(
     WITHOUT a single-partition global sort.
 
     Classic scalable zipWithIndex-by-sort: range-repartition on the sort
-    key, per-partition ``row_number`` (each window partition is one range
-    partition, so the sort work stays balanced across tasks), then add
-    broadcast per-partition offsets (one tiny driver-side cumulative sum
-    over <= num_partitions counts).  At 10^9 exceptions this is N
-    balanced sorts instead of one task sorting everything.
-    """
-    from pyspark.sql.window import Window
+    key and persist, collect the per-partition row counts (one small
+    aggregation), then sort within each range partition and number every
+    row as its position in the partition plus the partition's offset.
+    The offsets are a cumulative sum over <= num_partitions counts and
+    enter the plan as one array literal, so there is no second shuffle
+    and no offsets join.  At 10^9 exceptions this is N balanced sorts
+    instead of one task sorting everything.
 
+    The row count it collects is kept on the result as ``_dsi_total``.
+    """
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
@@ -52,29 +60,31 @@ def dense_sorted_index(
         # and the index job must see the SAME partitioning
         .persist()
     )
-    counts = sorted(
-        (r["__pid"], r["cnt"])
-        for r in parted.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
+    counts = dict(
+        parted.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
     )
-    offsets, acc = [], 0
-    for pid, cnt in counts:
-        offsets.append((pid, acc))
-        acc += cnt
-    if not offsets:
-        return df.withColumn(idx_name, F.lit(0).cast("long")).limit(0)
-    offs = spark.createDataFrame(offsets, "__pid int, __off long")
-    w = Window.partitionBy("__pid").orderBy(*sort_cols)
+    offsets, total = [], 0
+    for pid in range(max(counts, default=-1) + 1):
+        offsets.append(total)
+        total += counts.get(pid, 0)
+    # monotonically_increasing_id is (partition id << 33) + the row's
+    # position in its partition; the persisted partitions are the range
+    # partitions, so subtracting the first term leaves the position.
+    pos = F.monotonically_increasing_id() - F.shiftleft(F.col("__pid").cast("long"), 33)
     out = (
-        parted.withColumn("__rn", F.row_number().over(w) - 1)
-        .join(F.broadcast(offs), "__pid")
-        .withColumn(idx_name, (F.col("__off") + F.col("__rn")).cast("long"))
-        .drop("__pid", "__rn", "__off")
+        parted.sortWithinPartitions(*sort_cols)
+        .withColumn(
+            idx_name,
+            (F.lit(offsets or [0]).cast("array<long>")[F.col("__pid")] + pos).cast("long"),
+        )
+        .drop("__pid")
     )
     # expose the persisted source so callers can release the cached
     # blocks once `out` has been materialized (unpersisting EARLIER
     # would re-sample the range boundaries and desynchronize the
     # offsets from the partitioning)
     out._dsi_persisted_source = parted
+    out._dsi_total = total
     return out
 
 
@@ -221,38 +231,41 @@ class AuditStore:
         the window, skip the save and return None.
         """
         now = now or datetime.now(timezone.utc)
-        num_exceptions = exceptions.count()
-        runs = self.read_runs()
-        if runs is not None:
-            cutoff = now - timedelta(hours=dedup_window_hours)
-            dup = (
-                runs.where(
-                    (F.col("system_name") == system_name)
-                    & (F.col("primary_key_used") == primary_key_used)
-                    & (F.col("match_rate") == match_rate)
-                    & (F.col("num_exceptions") == num_exceptions)
-                    & (F.col("date") >= F.lit(cutoff))
-                )
-                .limit(1)
-                .count()
-            )
-            if dup:
-                return None
-
-        run_id = uuid.uuid4().hex
-        header = self.spark.createDataFrame(
-            [(run_id, now, float(match_rate), system_name, num_exceptions, primary_key_used)],
-            "run_id string, date timestamp, match_rate double, system_name string, "
-            "num_exceptions long, primary_key_used string",
-        )
-        self._write(header, "runs")
         # deterministic per-run exception index (the reference's implicit
         # list position, app.py:403) so the rejection loop can reference
         # individual exceptions stably.  dense_sorted_index assigns the
         # content-ordered 0..n-1 index with balanced range partitions —
-        # no Window.partitionBy(lit(1)) single-task global sort.
+        # no Window.partitionBy(lit(1)) single-task global sort — and
+        # its per-partition counts give the exception total.
         indexed = dense_sorted_index(exceptions, "exc_idx")
         try:
+            num_exceptions = indexed._dsi_total
+            runs = self.read_runs()
+            if runs is not None:
+                cutoff = now - timedelta(hours=dedup_window_hours)
+                dup = (
+                    runs.where(
+                        (F.col("system_name") == system_name)
+                        & (F.col("primary_key_used") == primary_key_used)
+                        & (F.col("match_rate") == match_rate)
+                        & (F.col("num_exceptions") == num_exceptions)
+                        & (F.col("date") >= F.lit(cutoff))
+                    )
+                    .limit(1)
+                    .count()
+                )
+                if dup:
+                    return None
+
+            run_id = uuid.uuid4().hex
+            header = driver_table(
+                self.spark,
+                [(run_id, now, float(match_rate), system_name, num_exceptions,
+                  primary_key_used)],
+                "run_id string, date timestamp, match_rate double, "
+                "system_name string, num_exceptions long, primary_key_used string",
+            )
+            self._write(header, "runs")
             self._write(indexed.withColumn("run_id", F.lit(run_id)), "exceptions")
         finally:
             release_index_source(indexed)
@@ -275,8 +288,10 @@ class AuditStore:
         exceptions table with name='REJECTED_EXCEPTION' rows,
         app.py:302-344; a separate table keeps the schema clean while
         preserving the anti-join read pattern)."""
-        df = self.spark.createDataFrame(
-            [(run_id, int(i)) for i in exc_indices], "run_id string, exc_idx long"
+        df = driver_table(
+            self.spark,
+            [(run_id, int(i)) for i in exc_indices],
+            "run_id string, exc_idx long",
         )
         self._write(df, "rejections")
 
@@ -284,7 +299,7 @@ class AuditStore:
         df = self._read("rejections")
         if df is None:
             return None
-        return df.where(F.col("run_id") == run_id).select("exc_idx").distinct()
+        return df.where(F.col("run_id") == run_id).select("exc_idx")
 
     def filtered_exceptions(self, run_id: str) -> DataFrame | None:
         """Exceptions minus rejected ones (anti-join; reference
@@ -306,11 +321,18 @@ class AuditStore:
         exc = self.read_exceptions(run_id)
         if exc is None:
             return None
-        total = exc.count()
+        # one aggregation over the exceptions: the IN-subquery plans as an
+        # existence join (broadcast while the rejections are small), so
+        # the rejections need no distinct and no count of their own
         rejected = self._rejected(run_id)
-        n_rejected = 0 if rejected is None else exc.join(
-            F.broadcast(rejected), "exc_idx", "left_semi"
-        ).count()
+        is_rejected = (
+            F.lit(False) if rejected is None else F.col("exc_idx").isin(rejected)
+        )
+        row = exc.agg(
+            F.count(F.lit(1)).alias("total"),
+            F.count_if(is_rejected).alias("rejected"),
+        ).first()
+        total, n_rejected = row["total"], row["rejected"]
         remaining = total - n_rejected
         new_rate = (
             round((total - remaining) / total * 100, 2) if total > 0 else 100.0

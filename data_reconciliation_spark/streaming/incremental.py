@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from data_reconciliation_spark.config import ReconConfig
 from data_reconciliation_spark.operators.reconcile import _mismatch_expr
+from data_reconciliation_spark.session import driver_table
 
 
 def windowed_event_dedup(
@@ -281,7 +282,7 @@ class SessionMetricsAuditListener:
                 self.manager = mgr
                 self.flush_every = max(1, int(n_flush))
                 self.last_error: str | None = None
-                self._buf: list[dict] = []
+                self._buf: list[tuple] = []
 
             def onQueryStarted(self, event):
                 pass
@@ -291,12 +292,11 @@ class SessionMetricsAuditListener:
                     return
                 rows, self._buf = self._buf, []
                 spark = self.manager.spark
-                df = spark.createDataFrame(
+                df = driver_table(
+                    spark,
                     rows,
-                    schema=(
-                        "query_id string, iteration int, stage string, "
-                        "evicted_sessions long, closed_sessions long"
-                    ),
+                    "query_id string, iteration int, stage string, "
+                    "evicted_sessions long, closed_sessions long",
                 ).withColumn("saved_at", F.current_timestamp())
                 self.manager.write_lineage(df)
 
@@ -307,13 +307,13 @@ class SessionMetricsAuditListener:
                     if m is None:
                         return
                     self._buf.append(
-                        {
-                            "query_id": str(p.id),
-                            "iteration": int(p.batchId),
-                            "stage": "sessionizer",
-                            "evicted_sessions": int(m["evicted_sessions"] or 0),
-                            "closed_sessions": int(m["closed_sessions"] or 0),
-                        }
+                        (
+                            str(p.id),
+                            int(p.batchId),
+                            "sessionizer",
+                            int(m["evicted_sessions"] or 0),
+                            int(m["closed_sessions"] or 0),
+                        )
                     )
                     if len(self._buf) >= self.flush_every:
                         self._flush()

@@ -18,6 +18,14 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def sample_csvs(tmp_path):
+    """(old, new) CSV paths holding the reference's sample pair rows."""
+    from tests.sample_rows import write_sample_csvs
+
+    return write_sample_csvs(str(tmp_path))
+
+
 # ---------------------------------------------------------------------------
 # Skip-creep guard (round-4 verdict #7): the suite's ONLY sanctioned
 # skips are the environment-gated Iceberg tests (no

@@ -10,6 +10,7 @@ import pytest
 from data_reconciliation_spark.config import load_mapping
 from data_reconciliation_spark.functions.normalize import prepare_snapshot
 from data_reconciliation_spark.operators.reconcile import reconcile
+from tests.sample_rows import COLS, NEW_ROWS, OLD_ROWS
 
 MAPPING_YAML = """\
 # shape-parity fixture: reference mapping.yaml:11-65
@@ -87,31 +88,6 @@ def test_load_mapping_normalization(mapping_path):
     assert fields["empty_rules"].type is None and not fields["empty_rules"].clean
     assert m.recon.ignore_nulls is False
     assert m.recon.include_missing_records is False
-
-
-# the reference repo's own sample_data CSV rows (sample_old.csv /
-# sample_new.csv) — the drift cases its README demos: whitespace drift,
-# fuzzy-pass vs fuzzy-fail renames, tolerance-boundary prices, date
-# format drift, quantity change, ignored vendor swap, location renames
-COLS = (
-    "ID string, Name string, Price double, Date string, Quantity int, "
-    "Category string, Description string, Vendor string, Location string, "
-    "Status string"
-)
-OLD_ROWS = [
-    ("1", "ACME Corp", 100.0, "2025-07-09", 10, "Equity", "Tech giant", "OldSys", "NY", "Active"),
-    ("2", "Beta LLC", 250.5, "2025-07-09", 5, "Bond", "Government bond", "OldSys", "LA", "Active"),
-    ("3", "Gamma Inc", 75.25, "2025-07-09", 8, "Equity", "Industrial", "OldSys", "SF", "Inactive"),
-    ("4", "Delta Co", 300.0, "2025-07-09", 2, "ETF", "Index fund", "OldSys", "Chicago", "Active"),
-    ("5", "Epsilon Ltd", 150.75, "2025-07-09", 6, "Equity", "Healthcare", "OldSys", "Boston", "Inactive"),
-]
-NEW_ROWS = [
-    ("1", "ACME  Corp ", 100.0, "09 Jul 2025", 10, "Equity", "Tech giant", "NewSys", "New York", "Active"),
-    ("2", "Beta LLC", 250.49, "2025-07-09", 5, "Bond", "Govt bond", "NewSys", "Los Angeles", "Active"),
-    ("3", "Gamma Incorp", 75.3, "2025/07/09", 8, "Equity", "Industrial", "NewSys", "San Francisco", "Inactive"),
-    ("4", "Delta Company", 310.0, "2025-07-09", 3, "ETF", "Index fund", "NewSys", "Chicago", "Active"),
-    ("5", "Epsilon Ltd", 150.75, "2025-07-09", 6, "Equity", "Healthcare", "NewSys", "Boston", "Inactive"),
-]
 
 
 def test_sample_pair_drift_through_loaded_mapping(spark, mapping_path):

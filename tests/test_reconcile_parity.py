@@ -283,3 +283,37 @@ def test_metrics_only_unique_pk_matches_join_path(snapshots):
         join_based.field_exception_count,
         join_based.per_field_exceptions,
     )
+
+
+def _scalars(res):
+    return (
+        res.match_pct,
+        res.n_both,
+        res.n_old_only,
+        res.n_new_only,
+        res.field_exception_count,
+        res.per_field_exceptions,
+    )
+
+
+@pytest.mark.parametrize(
+    "fields",
+    [
+        # one ignored column: it must stay out of the union-aggregate
+        # exchange and out of the scalars
+        {**FIELD_CFG, "age": {"type": "ignore"}},
+        # every compare column ignored: the union-aggregate plan has no
+        # active column and falls back to the join path
+        {c: {"type": "ignore"} for c in FIELD_CFG},
+    ],
+    ids=["one_ignored", "all_ignored"],
+)
+def test_metrics_only_unique_pk_ignore_rules(snapshots, fields):
+    df_old, df_new = snapshots
+    cfg = {"ignore_nulls": False, "include_missing_records": True, "fields": fields}
+    old, new = df_old.where("id != 6"), df_new.where("id != 5")
+    join_based = reconcile(old, new, ["id"], cfg, metrics_only=True)
+    union_agg = reconcile(old, new, ["id"], cfg, metrics_only=True, unique_pk=True)
+    assert _scalars(union_agg) == _scalars(join_based)
+    ignored = {c for c, rule in fields.items() if rule["type"] == "ignore"}
+    assert not ignored & set(union_agg.per_field_exceptions)

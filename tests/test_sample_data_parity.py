@@ -1,7 +1,9 @@
-"""End-to-end parity on the reference's own golden sample artifacts:
-``/root/reference/sample_data/sample_{old,new}.csv`` under the
-``mapping.yaml`` field rules, cross-checked against the pandas oracle
-(which replicates the reference compare semantics exactly).
+"""End-to-end parity on the reference's own golden sample pair: the rows
+of its ``sample_data/sample_{old,new}.csv``, kept in
+``tests/sample_rows.py`` and written as CSV files under ``tmp_path`` by
+the ``sample_csvs`` fixture, under the ``mapping.yaml`` field rules,
+cross-checked against the pandas oracle (which replicates the reference
+compare semantics exactly).
 
 Exercises the full load path (CSV scan -> column canonicalization ->
 config cleaning) plus exact/fuzzy/tolerance dispatch, the ignored
@@ -11,18 +13,13 @@ compare.py — so '2025-07-09' vs '09 Jul 2025' IS an exception)."""
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
-import pytest
 
 from data_reconciliation_spark.config import ReconConfig
 from data_reconciliation_spark.functions.normalize import prepare_snapshot
 from data_reconciliation_spark.operators.reconcile import reconcile
 from data_reconciliation_spark.sources.readers import read_csv_with_fallback
 from tests.oracle_pandas import run_compare_oracle
-
-SAMPLE_DIR = "/root/reference/sample_data"
 
 CFG = {
     "ignore_nulls": False,
@@ -54,22 +51,16 @@ def _canon_pandas(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-@pytest.mark.skipif(
-    not os.path.exists(f"{SAMPLE_DIR}/sample_old.csv"), reason="reference absent"
-)
-def test_sample_csv_parity(spark):
+def test_sample_csv_parity(spark, sample_csvs):
+    old_csv, new_csv = sample_csvs
     cfg = ReconConfig.from_dict(CFG)
-    df_old = prepare_snapshot(
-        read_csv_with_fallback(spark, f"{SAMPLE_DIR}/sample_old.csv"), cfg.fields
-    )
-    df_new = prepare_snapshot(
-        read_csv_with_fallback(spark, f"{SAMPLE_DIR}/sample_new.csv"), cfg.fields
-    )
+    df_old = prepare_snapshot(read_csv_with_fallback(spark, old_csv), cfg.fields)
+    df_new = prepare_snapshot(read_csv_with_fallback(spark, new_csv), cfg.fields)
     res = reconcile(df_old, df_new, ["id"], cfg)
 
     # oracle on the same files through pandas (same canonicalization)
-    p_old = _canon_pandas(pd.read_csv(f"{SAMPLE_DIR}/sample_old.csv"))
-    p_new = _canon_pandas(pd.read_csv(f"{SAMPLE_DIR}/sample_new.csv"))
+    p_old = _canon_pandas(pd.read_csv(old_csv))
+    p_new = _canon_pandas(pd.read_csv(new_csv))
     want = run_compare_oracle(p_old, p_new, ["id"], CFG)
 
     got_exc = {(r["id"], r["field"]) for r in res.exceptions.collect()}

@@ -52,10 +52,34 @@ def main() -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         return simhash_pairs(docs, max_hamming=6, n_chunks=8)
 
+    class _Abort(Exception):
+        pass
+
+    def capture(set_probe, run, what: str):
+        # install a plan probe that records the DataFrame it is handed and
+        # aborts the caller before it executes anything; fail clearly if
+        # the probe never fired (the hook moved or the path was not taken)
+        captured = []
+
+        def probe(df):
+            captured.append(df)
+            raise _Abort
+
+        set_probe(probe)
+        try:
+            run()
+        except _Abort:
+            pass
+        finally:
+            set_probe(None)
+        if not captured:
+            raise RuntimeError(f"{what}: plan probe never fired, nothing captured")
+        return captured[0]
+
     def a1_metrics_plan(unique_pk: bool):
         # The a1 query's real plan lives inside reconcile() (the declared
-        # DF is a literal of the collected scalars); capture the executed
-        # metrics aggregation via the _metrics_plan_probe hook.  The
+        # DF is a literal of the collected scalars); capture the metrics
+        # aggregation via the _metrics_plan_probe hook.  The
         # unique_pk=False call is the pre-r7 plan (full-outer merge +
         # aggregate) — both paths still exist in the operator, so before
         # and after are dumped from the same tree.
@@ -69,9 +93,7 @@ def main() -> None:
             _snapshots,
         )
 
-        captured = []
-        rmod._metrics_plan_probe = captured.append
-        try:
+        def run():
             old, new = _snapshots(spark, sf_dir)
             rmod.reconcile(
                 old,
@@ -81,9 +103,10 @@ def main() -> None:
                 metrics_only=True,
                 unique_pk=unique_pk,
             )
-        finally:
-            rmod._metrics_plan_probe = None
-        return captured[0]
+
+        return capture(
+            lambda p: setattr(rmod, "_metrics_plan_probe", p), run, "a1_match_metrics"
+        )
 
     def cluster_entry_plan(assume_distinct: bool):
         # The chain query's r7 change is inside connected_components (the
@@ -104,23 +127,11 @@ def main() -> None:
             F.format_string("n%09d", F.col("event_id") - 1).alias("dst"),
         )
 
-        captured = []
-
-        class _Abort(Exception):
-            pass
-
-        def probe(df):
-            captured.append(df)
-            raise _Abort
-
-        cmod._entry_plan_probe = probe
-        try:
-            cmod.connected_components(edges, assume_distinct=assume_distinct)
-        except _Abort:
-            pass
-        finally:
-            cmod._entry_plan_probe = None
-        return captured[0]
+        return capture(
+            lambda p: setattr(cmod, "_entry_plan_probe", p),
+            lambda: cmod.connected_components(edges, assume_distinct=assume_distinct),
+            "cluster_entry",
+        )
 
     plans = {
         "reconcile_exceptions": lambda: dq.q_reconcile_exceptions(spark, sf_dir),
