@@ -167,10 +167,6 @@ class BlockingConfig:
     num_hashes: int = 64          # MinHash signature length
     bands: int = 16               # LSH bands (rows = num_hashes // bands)
     shingle_size: int = 3         # token shingles for MinHash
-    use_host_key: bool = True     # normalized-URL-host blocking
-    use_minhash_bands: bool = True
-    salt_hot_keys: bool = True    # salted repartition for hot hosts
-    hot_key_threshold: int = 10_000   # rows per block before salting kicks in
     # Blocks above this member count are excluded from pairwise candidate
     # generation (a 500-member block is already 125k pairs).  Content-based
     # MinHash bands retain recall inside oversized host blocks — a hot host
@@ -181,14 +177,6 @@ class BlockingConfig:
     # joined back from a compact mapping afterwards.  Hash collisions can
     # only add candidates (verified by scoring), never drop true pairs.
     dictionary_ids: bool = True
-    # MinHash signature kernel: "arrow" = native per-shingle xxhash64 +
-    # vectorized numpy lane-min over Arrow batches (measured ~15x faster
-    # than the interpreted Catalyst fold on the block-table build);
-    # "native" = pure Catalyst aggregate fold (zero Python — for
-    # environments where Python workers are unavailable).  Signature
-    # VALUES differ between kernels; nothing downstream depends on them
-    # beyond determinism + min-wise uniformity.
-    minhash_kernel: str = "arrow"
 
     @property
     def rows_per_band(self) -> int:

@@ -9,7 +9,6 @@ from data_reconciliation_spark.functions.similarity import (  # noqa: F401
     indel_ratio_py,
     jaro_winkler_py,
     simhash64_py,
-    simhash64_native,
     simhash64_md5_py,
     indel_ratio_udf,
 )

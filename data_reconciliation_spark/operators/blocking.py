@@ -10,10 +10,11 @@ candidate-generation keys instead (SURVEY.md §2.3 "similarity join"):
   near-duplicate texts collide on at least one band key with high
   probability
 
-Everything is native Catalyst expressions (xxhash64 inside higher-order
-functions) — signature computation is map-only, embarrassingly parallel,
-and whole-stage-codegen'd.  No Python, no ml.Vector overhead, and
-deterministic across cluster sizes.
+Every key is an 8-byte long (``xxhash64`` of the host; one
+``xxhash64`` per signature band), so the block self-join shuffles fixed-
+width keys.  Shingle hashing is native; the MinHash lane-min runs in one
+Arrow-batched kernel (:func:`attach_minhash_signature`).  Signatures
+are deterministic across cluster sizes.
 
 Skew: hot blocking keys (one host holding 20% of a crawl) are handled
 two ways — (a) oversized blocks are excluded from *pairwise* candidate
@@ -77,41 +78,6 @@ def dictionary_uid(col: Column) -> Column:
     return F.xxhash64(col)
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64, seed: int = 0) -> Column:
-    """array<bigint> MinHash signature: per hash-function i, the min of
-    ``xxhash64(xxhash64(shingle, seed), i)`` over all shingles.
-
-    Implemented as a single ``aggregate`` fold over the shingle array
-    (running element-wise min of a k-wide hash vector).  The obvious
-    alternative — ``transform(0..k-1, i -> array_min(transform(shingles,
-    s -> hash(s,i))))`` — re-evaluates the shingle expression per hash
-    function inside interpreted (non-codegen) HOF evaluation and measured
-    ~33x slower at k=64; the fold walks the shingles exactly once.
-
-    The shingle STRING is hashed exactly once (O(len)); the per-function
-    hashes re-hash only that 8-byte value (O(1) each), bound as a lambda
-    variable via a single-element transform so the string hash is not
-    re-evaluated per hash function.  Same derivation trick as Spark ML's
-    MinHashLSH (one base hash, k cheap rehashes), with full xxhash64
-    mixing instead of a linear congruence.
-    """
-    init = F.array_repeat(F.lit(_LONG_MAX).cast("long"), num_hashes)
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-
-    def step(acc: Column, s: Column) -> Column:
-        return F.element_at(
-            F.transform(
-                F.array(F.xxhash64(s, F.lit(seed))),
-                lambda h: F.zip_with(
-                    acc, idx, lambda a, i: F.least(a, F.xxhash64(h, i))
-                ),
-            ),
-            1,
-        )
-
-    return F.aggregate(shingles, init, step)
-
-
 def _splitmix64(x):
     """Vectorized splitmix64 finalizer over a uint64 numpy array (public
     algorithm, Steele et al. 2014) — full-avalanche mixing so each lane
@@ -144,23 +110,22 @@ def minhash_signature_batch(num_hashes: int = 64, seed: int = 0):
     signature from an array of per-shingle hashes (use via
     :func:`attach_minhash_signature`, which owns the plan shape).
 
-    Same contract as :func:`minhash_signature` (per lane i, a min-wise
-    hash over the shingle set; identical shingle sets => identical
-    signatures at ANY parallelism) but ~15x cheaper at scale: the
-    shingle STRING is hashed once natively (one ``transform`` +
-    ``xxhash64`` pass, whole-stage codegen), and the 64-lane rehash +
-    min — pure integer mixing with no string work — runs as numpy
-    ``minimum.reduceat`` over the Arrow batch instead of an interpreted
-    Catalyst ``aggregate`` fold (measured 9.3s -> <1s for the 20k-page
-    block-table build; interpreted HOF evaluation pays per-element
-    expression-tree overhead that dominates the arithmetic).
+    The MinHash contract: per lane i, a min-wise hash over the shingle
+    set, so identical shingle sets give identical signatures at ANY
+    parallelism.  The shingle STRING is hashed once natively (one
+    ``transform`` + ``xxhash64`` pass, whole-stage codegen), and the
+    64-lane rehash + min — pure integer mixing with no string work —
+    runs as numpy ``minimum.reduceat`` over the Arrow batch.  An
+    interpreted Catalyst ``aggregate`` fold computing the same contract
+    measured 9.3s vs <1s for the 20k-page block-table build:
+    interpreted HOF evaluation pays per-element expression-tree
+    overhead that dominates the arithmetic.
 
-    The signature VALUES differ from :func:`minhash_signature` (xxhash64
-    lane mixing vs splitmix64): nothing downstream depends on the
-    values, only on determinism and min-wise uniformity — band keys
-    hash the signature, and the LSH recall guarantee (identical sets
-    always collide; similar sets collide with prob ~J^r per band) holds
-    for any uniform per-lane hash family.
+    Lanes are mixed with splitmix64.  Nothing downstream depends on the
+    signature values, only on determinism and min-wise uniformity —
+    band keys hash the signature, and the LSH recall guarantee
+    (identical sets always collide; similar sets collide with prob
+    ~J^r per band) holds for any uniform per-lane hash family.
     """
     import numpy as np
     from pyspark.sql import types as T
@@ -242,29 +207,11 @@ def attach_minhash_signature(
     )
 
 
-def band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """array<string> LSH band keys: hash of each signature band, prefixed
-    with the band index so different bands never collide."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.concat(
-            F.lit("mh"),
-            b.cast("string"),
-            F.lit(":"),
-            F.xxhash64(F.slice(signature, b * rows_per_band + 1, rows_per_band), b).cast(
-                "string"
-            ),
-        ),
-    )
-
-
 def band_hashes(signature: Column, bands: int, rows_per_band: int) -> Column:
     """array<bigint> LSH band keys: ``xxhash64(band_slice, band_index)``
-    per band — the numeric twin of :func:`band_keys` for consumers that
-    only equi-join on the key (minhash_lsh_pairs).  Folding the band
-    index into the hash arguments keeps different bands collision-free
-    without the string concat + re-hash the string form pays; the self-
-    join then shuffles an 8-byte long instead of a ~25-byte string."""
+    per band.  Folding the band index into the hash arguments keeps
+    different bands apart without a string prefix, and the self-join
+    shuffles an 8-byte long."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.xxhash64(
@@ -274,37 +221,20 @@ def band_hashes(signature: Column, bands: int, rows_per_band: int) -> Column:
 
 
 def with_blocking_keys(pages: DataFrame, cfg: BlockingConfig | None = None) -> DataFrame:
-    """Add ``block_keys: array<string>`` (host key + LSH band keys)."""
+    """Add ``block_keys: array<bigint>``: ``xxhash64`` of the normalized
+    host, then the MinHash-LSH :func:`band_hashes`."""
     cfg = cfg or BlockingConfig()
-    keys = []
-    if cfg.use_minhash_bands:
-        # materialize the signature as its own projection FIRST: band_keys
-        # slices it once per band, and HOF lambdas re-evaluate inlined
-        # subexpressions per element (a 16x fold blow-up measured at
-        # bands=16 when the aggregate is inlined).
-        if cfg.minhash_kernel == "arrow":
-            pages = attach_minhash_signature(
-                pages,
-                token_shingles("text", cfg.shingle_size),
-                "__minhash_sig",
-                cfg.num_hashes,
-            )
-        else:
-            pages = pages.withColumn(
-                "__minhash_sig",
-                minhash_signature(
-                    token_shingles("text", cfg.shingle_size), cfg.num_hashes
-                ),
-            )
-        keys.append(band_keys(F.col("__minhash_sig"), cfg.bands, cfg.rows_per_band))
-    if cfg.use_host_key:
-        keys.insert(0, F.array(F.concat(F.lit("host:"), normalized_host("url"))))
-    if not keys:
-        raise ValueError("at least one blocking strategy must be enabled")
-    combined = keys[0]
-    for k in keys[1:]:
-        combined = F.concat(combined, k)
-    return pages.withColumn("block_keys", combined).drop("__minhash_sig")
+    # the signature is its own projection: band_hashes slices it once
+    # per band, and HOF lambdas re-evaluate inlined subexpressions per
+    # element
+    pages = attach_minhash_signature(
+        pages, token_shingles("text", cfg.shingle_size), "__minhash_sig", cfg.num_hashes
+    )
+    keys = F.concat(
+        F.array(F.xxhash64(normalized_host("url"))),
+        band_hashes(F.col("__minhash_sig"), cfg.bands, cfg.rows_per_band),
+    )
+    return pages.withColumn("block_keys", keys).drop("__minhash_sig")
 
 
 def exploded_blocks(pages_with_keys: DataFrame, id_col: str = "url") -> DataFrame:
@@ -353,8 +283,7 @@ def candidate_pairs(
     Oversized blocks (> cfg.max_block_size members) are excluded from the
     pairwise explosion — an O(n²)-guard; the MinHash band keys inside such
     blocks still generate content-similar candidates because band keys
-    partition by *content*, not host.  Excluded block stats are returned
-    via ``candidate_pairs.stats`` on the driver for lineage/metrics.
+    partition by *content*, not host.
 
     ``keep_hashed_ids`` (with ``cfg.dictionary_ids``): skip the two
     mapping joins that translate the 8-byte dictionary ids back to real
@@ -372,19 +301,17 @@ def candidate_pairs(
     keyed = with_blocking_keys(pages, cfg)
     blocks = exploded_blocks(keyed, id_col)
 
-    # Dictionary-encode both the row id and the block key to 8-byte
-    # hashes for the wide shuffle (a url string is ~50 bytes; the block
-    # table is the single largest exchange in the pipeline).  Hash
-    # collisions can only ADD candidate pairs (verified downstream by
-    # scoring) or merge two blocks — never lose a true pair beyond the
-    # band-probability already accepted.  Final outputs carry real ids
-    # (joined back from the compact mapping table).
+    # Dictionary-encode the row id to an 8-byte hash for the wide
+    # shuffle (a url string is ~50 bytes; the block table is the single
+    # largest exchange in the pipeline); block keys are already 8 bytes.
+    # Hash collisions can only ADD candidate pairs (verified downstream
+    # by scoring) or merge two blocks — never lose a true pair beyond
+    # the band-probability already accepted.  Final outputs carry real
+    # ids (joined back from the compact mapping table).
     if cfg.dictionary_ids:
         uid = dictionary_uid(F.col(id_col))
         mapping = pages.select(uid.alias("__uid"), F.col(id_col)).distinct()
-        blocks = blocks.select(
-            F.xxhash64("block_key").alias("block_key"), uid.alias(id_col)
-        )
+        blocks = blocks.select("block_key", uid.alias(id_col))
 
     # Materialize the block table: it is consumed three times (size
     # histogram + both sides of the self-join), and the MinHash key
@@ -395,12 +322,11 @@ def candidate_pairs(
     # table write; same dataflow.
     from pyspark.storagelevel import StorageLevel
 
-    if cfg.salt_hot_keys:
-        # spread hot blocking keys across salt_buckets shuffle keys before
-        # materialization so no single partition owns a hot host (AQE can
-        # split skewed SMJ partitions later, but balanced storage +
-        # balanced map tasks need the salt at write time).
-        blocks = salted_repartition(blocks, "block_key", salt_buckets=16, id_col=id_col)
+    # spread hot blocking keys across salt_buckets shuffle keys before
+    # materialization so no single partition owns a hot host (AQE can
+    # split skewed SMJ partitions later, but balanced storage +
+    # balanced map tasks need the salt at write time).
+    blocks = salted_repartition(blocks, "block_key", salt_buckets=16, id_col=id_col)
     # registered on the returned pairs — caller (or the composing
     # operator, see scoring.block_score_pipeline) releases via
     # lifecycle.release_cached after materializing

@@ -25,11 +25,16 @@ from pyspark.sql.window import Window
 from data_reconciliation_spark.config import BlockingConfig
 from data_reconciliation_spark.functions.normalize import normalized_text
 from data_reconciliation_spark.lifecycle import register_cached
-from data_reconciliation_spark.functions.similarity import simhash64_udf
+from data_reconciliation_spark.functions.similarity import (
+    attach_simhash64_md5,
+    hashed_jaccard,
+    simhash64_udf,
+)
 from data_reconciliation_spark.operators.blocking import (
-    band_keys,
-    minhash_signature,
+    attach_minhash_signature,
+    band_hashes,
     token_shingles,
+    token_shingles_from,
 )
 
 
@@ -208,7 +213,6 @@ def minhash_lsh_pairs(
     verify_threshold: float | None = 0.7,
     text_col: str = "text",
     id_col: str = "doc_id",
-    latency_regime: bool | None = None,
 ) -> DataFrame:
     """Scale-path near-dup: shingle -> MinHash -> band -> bucket equi-join.
 
@@ -226,21 +230,9 @@ def minhash_lsh_pairs(
 
     The caller releases the internal per-doc cache with
     ``lifecycle.release_cached(result)`` after materializing.
-
-    (``latency_regime`` is accepted for API symmetry with link()/the
-    closure but currently ignored: A/B at bench scale measured the
-    AQE-off cloned-session variant within noise of the default — this
-    operator has ~4 shuffle stages, not the ~30 of the full pipeline,
-    so per-stage AQE re-planning never dominates it.)
     """
     cfg = cfg or BlockingConfig()
     docs = _widen_for_kernel(docs)
-
-    from data_reconciliation_spark.operators.blocking import (
-        attach_minhash_signature,
-        band_hashes,
-        token_shingles_from,
-    )
 
     # ONE tokenization pass: the token array is materialized as its own
     # projection and feeds both the shingle/signature path and the
@@ -258,23 +250,16 @@ def minhash_lsh_pairs(
             ).alias("__th")
         )
     shingles = token_shingles_from(F.col("__toks"), cfg.shingle_size)
-    if cfg.minhash_kernel == "arrow":
-        # Arrow kernel with the double Generate-barrier plan shape (see
-        # blocking.attach_minhash_signature for the rationale); the
-        # extra __th column rides through as a plain attribute (never
-        # crosses into Python — ArrowEvalPython ships UDF inputs only).
-        sig = attach_minhash_signature(
-            base.select(F.col(id_col), *extra, F.col("__toks")),
-            shingles,
-            "__sig",
-            cfg.num_hashes,
-        )
-    else:
-        sig = base.select(
-            F.col(id_col),
-            *extra,
-            minhash_signature(shingles, cfg.num_hashes).alias("__sig"),
-        )
+    # Arrow kernel with the double Generate-barrier plan shape (see
+    # blocking.attach_minhash_signature for the rationale); the extra
+    # __th column rides through as a plain attribute (never crosses into
+    # Python — ArrowEvalPython ships UDF inputs only).
+    sig = attach_minhash_signature(
+        base.select(F.col(id_col), *extra, F.col("__toks")),
+        shingles,
+        "__sig",
+        cfg.num_hashes,
+    )
     from pyspark.storagelevel import StorageLevel
 
     # Single per-doc cache: (id[, token hashes], band hashes).  The band
@@ -343,23 +328,10 @@ def minhash_lsh_pairs(
         # (exact string jaccard) still matches bit-for-bit.
         ta = per_doc.select(F.col(id_col).alias("id_a"), F.col("__th").alias("__th_a"))
         tb = per_doc.select(F.col(id_col).alias("id_b"), F.col("__th").alias("__th_b"))
-
-        def _jac(i):
-            union = F.size("__th_a") + F.size("__th_b") - i
-            return F.when(union == 0, F.lit(1.0)).otherwise(
-                i.cast("double") / union
-            )
-
-        jaccard = F.element_at(
-            F.transform(
-                F.array(F.size(F.array_intersect("__th_a", "__th_b"))), _jac
-            ),
-            1,
-        )
         pairs = (
             pairs.join(ta, "id_a")
             .join(tb, "id_b")
-            .withColumn("jaccard", jaccard)
+            .withColumn("jaccard", hashed_jaccard("__th_a", "__th_b"))
             .where(F.col("jaccard") >= verify_threshold)
             .select("id_a", "id_b", "jaccard")
         )
@@ -374,7 +346,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_bucket_size: int | None = 1000,
     use_native: bool = True,
-    arrow_sig: bool = True,
 ) -> DataFrame:
     """SimHash near-dup: 64-bit signature, blocked on 64/n_chunks-bit
     chunks.
@@ -386,12 +357,12 @@ def simhash_pairs(
     candidates); ``max_hamming`` must be < ``n_chunks`` for guaranteed
     recall.
 
-    ``use_native`` (default): signatures via :func:`simhash64_native` —
-    pure Catalyst md5-nibble SimHash, zero Python, and reproducible in
-    DuckDB SQL so the driver oracle verifies the full pair set exactly
-    (recall is guaranteed by pigeonhole, so output == all pairs with
-    hamming <= max_hamming).  ``use_native=False`` keeps the blake2b
-    Arrow-UDF signature for parity with :func:`simhash64_py`.
+    ``use_native=True`` (default): the md5-nibble SimHash, computed by
+    the Arrow kernel :func:`attach_simhash64_md5`.  Its value is
+    reproducible in DuckDB SQL, so the driver oracle verifies the full
+    pair set exactly (recall is guaranteed by pigeonhole, so output ==
+    all pairs with hamming <= max_hamming).  ``use_native=False``: the
+    blake2b SimHash of :func:`simhash64_py`, via ``simhash64_udf``.
 
     ``max_bucket_size`` guards degenerate buckets (e.g. thousands of
     near-empty docs all hashing to signature 0): oversized
@@ -411,26 +382,12 @@ def simhash_pairs(
 
     # persist: the chunk table feeds both self-join sides; the per-doc
     # SimHash signature must be computed exactly once per document
-    if use_native and arrow_sig:
-        # same md5-nibble VALUE as simhash64_native (oracle unchanged),
-        # computed by the vectorized Arrow kernel — differential-tested
-        # bit-exact; arrow_sig=False keeps the zero-Python Catalyst fold
-        from data_reconciliation_spark.functions.similarity import (
-            attach_simhash64_md5,
-        )
-
+    if use_native:
         sig = attach_simhash64_md5(
             docs.select(F.col(id_col), normalized_text(F.col(text_col)).alias("__nt")),
             F.col("__nt"),
             "simhash",
         ).select(F.col(id_col), F.col("simhash")).persist(StorageLevel.MEMORY_AND_DISK)
-    elif use_native:
-        from data_reconciliation_spark.functions.similarity import simhash64_native
-
-        sig = docs.select(
-            F.col(id_col),
-            simhash64_native(normalized_text(F.col(text_col))).alias("simhash"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
     else:
         sig = docs.select(
             F.col(id_col),

@@ -50,6 +50,7 @@ from data_reconciliation_spark.functions.normalize import (
     normalized_text,
 )
 from data_reconciliation_spark.functions.similarity import (
+    hashed_jaccard,
     jaro_winkler_batch,
     simhash64_udf,
 )
@@ -140,26 +141,6 @@ def _native_jaccard(a, b):
     return F.when(union == 0, F.lit(1.0)).otherwise(inter.cast("double") / union)
 
 
-def _hashed_jaccard():
-    """Jaccard over precomputed token-hash arrays: ONE array_intersect
-    on plain attributes; |union| = |A|+|B|-|inter| so no union array is
-    ever built.  The intersect size is bound as a lambda variable via a
-    single-element transform so it is evaluated exactly once per pair
-    (a naive when/otherwise would re-run the intersect per reference)."""
-
-    def _jac(i):
-        union = F.size("tok_hashes_a") + F.size("tok_hashes_b") - i
-        return F.when(union == 0, F.lit(1.0)).otherwise(i.cast("double") / union)
-
-    return F.element_at(
-        F.transform(
-            F.array(F.size(F.array_intersect("tok_hashes_a", "tok_hashes_b"))),
-            _jac,
-        ),
-        1,
-    )
-
-
 def score_pairs(pairs: DataFrame, cfg: ScoringConfig | None = None) -> DataFrame:
     """Score candidate pairs carrying per-side payload columns
     ``canon_url_{a,b}, simhash_{a,b}`` plus ``tok_hashes_{a,b}`` (fast
@@ -184,7 +165,7 @@ def score_pairs(pairs: DataFrame, cfg: ScoringConfig | None = None) -> DataFrame
     # feature is evaluated exactly once (pinned by
     # tests/test_properties_and_plans.py plan regression).
     if "tok_hashes_a" in pairs.columns and "tok_hashes_b" in pairs.columns:
-        jaccard = _hashed_jaccard()
+        jaccard = hashed_jaccard("tok_hashes_a", "tok_hashes_b")
     else:
         jaccard = _native_jaccard(F.col("norm_text_a"), F.col("norm_text_b"))
     feat = F.explode(

@@ -840,7 +840,7 @@ FROM nodes
 #    filter then keeps exactly the token-set-equal pairs, which DuckDB
 #    recomputes directly.  (Probabilistic-recall thresholds are covered
 #    by pytest with a brute-force Jaccard oracle.)
-#  * simhash: native md5-nibble signature (simhash64_native) + pigeonhole
+#  * simhash: md5-nibble signature (attach_simhash64_md5) + pigeonhole
 #    recall (max_hamming < n_chunks) — output == ALL pairs with hamming
 #    <= max_hamming, and DuckDB reproduces the signature bit-for-bit from
 #    md5() + integer arithmetic.
@@ -892,7 +892,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # brute-force oracle: md5-nibble SimHash per doc (identical arithmetic to
-# simhash64_native), then every pair with bit_count(xor) <= 6 — valid
+# simhash64_md5_py), then every pair with bit_count(xor) <= 6 — valid
 # because 8 chunks guarantee recall for any hamming <= 7 by pigeonhole.
 SQL_SIMHASH = r"""
 WITH norm AS (

@@ -62,7 +62,8 @@ from data_reconciliation_spark.session import build_session
 from data_reconciliation_spark.testgen import generate_pages
 from data_reconciliation_spark.operators.blocking import candidate_pairs
 from data_reconciliation_spark.operators.scoring import (
-    prepare_pages, score_pairs, jw_features_udf, _hashed_jaccard)
+    prepare_pages, score_pairs, jw_features_udf)
+from data_reconciliation_spark.functions.similarity import hashed_jaccard
 
 spark = build_session(app_name=f"recon-profile-{cores}",
                       master=f"local[{cores}]",
@@ -123,7 +124,7 @@ def run(name, thunk, passes=3):
 
 run("scan", lambda: pairs.count())
 run("native", lambda: pairs
-    .withColumn("tj", _hashed_jaccard())
+    .withColumn("tj", hashed_jaccard("tok_hashes_a", "tok_hashes_b"))
     .withColumn("hd", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
     .where("tj >= 0.5 or hd <= 8").count())
 # NOTE: consume the udf output through ONE aggregate (count of non-null
